@@ -33,7 +33,6 @@ def _calibrate_ms() -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     loadavg_start = os.getloadavg()
     calib_ms = _calibrate_ms()
@@ -43,7 +42,7 @@ def main() -> None:
     )
     from end_to_end_data_engineering_and_ml_system_spark.session import get_spark
 
-    spark = get_spark(app_name="e2e-spark-bench", cpus=cpus)
+    spark = get_spark(app_name="e2e-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = bench_queries()

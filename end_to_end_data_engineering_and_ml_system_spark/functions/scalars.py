@@ -9,10 +9,43 @@ are plain column expressions.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def sql_name(name: str) -> str:
+    """A column name as a Spark SQL identifier (backticked, inner backticks
+    doubled) — safe for raw headers such as ``Flow Bytes/s`` or ``a.b``.
+
+    This and :func:`sql_lit` are how the package spells SQL text for its
+    wide projections. The rule: a wide projection is one ``selectExpr``,
+    never one py4j ``Column`` per feature. Every Column-API step is a
+    Python→JVM gateway round trip (about 35 for a cast+alias column, about
+    70 for a z-score), so a 64-feature projection built from Columns sends
+    thousands of gateway commands before Spark runs anything; the same
+    projection as SQL text is one call plus one command per list element,
+    and Catalyst resolves it to the identical expressions."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_lit(value: float | str) -> str:
+    """A float or string as a Spark SQL literal that parses back to the
+    same value: floats as ``repr(x)`` with a ``D`` suffix (bit-exact double
+    round trip; NaN and ±Inf, which have no literal form, as a cast of
+    their string spelling; negatives parenthesized, so ``a -{lit}`` can
+    never read as a ``--`` comment), strings single-quoted with ``\\`` and
+    ``'`` escaped."""
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    x = float(value)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"({x!r}D)" if math.copysign(1.0, x) < 0 else f"{x!r}D"
 
 
 def canonical_label(

@@ -25,6 +25,8 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import sql_lit, sql_name
+
 DEC = "decimal(28,10)"
 
 
@@ -48,33 +50,37 @@ def fit_standardizer(
     rule as r15's tokenize-spread rejections)."""
     from ..sources.catalog import spread_for_compute
 
-    df = df.select(*cols)
+    names = [sql_name(c) for c in cols]
+    df = df.selectExpr(*names)
     if spread:
-        df = spread_for_compute(df, F.xxhash64(*cols))
-    aggs: list[Column] = []
-    for c in cols:
-        x = F.col(c).cast("double")
-        mean = F.sum(x.cast(DEC)).cast("double") / F.count(x)
-        msq = F.sum((x * x).cast(DEC)).cast("double") / F.count(x)
-        aggs.append(mean.alias(f"mean_{c}"))
-        aggs.append(msq.alias(f"msq_{c}"))
-    stats = df.agg(*aggs)
-    derived = [
-        *[F.col(f"mean_{c}") for c in cols],
-        *[
-            F.when(
-                F.col(f"msq_{c}") - F.col(f"mean_{c}") * F.col(f"mean_{c}")
-                <= F.lit(0.0),
-                F.lit(1.0),
-            )
-            .otherwise(
-                F.sqrt(F.col(f"msq_{c}") - F.col(f"mean_{c}") * F.col(f"mean_{c}"))
-            )
-            .alias(f"std_{c}")
-            for c in cols
-        ],
-    ]
-    return stats.select(*derived)
+        df = spread_for_compute(df, F.expr(f"xxhash64({', '.join(names)})"))
+    aggs: list[str] = []
+    for c, n in zip(cols, names):
+        x = f"CAST({n} AS DOUBLE)"
+        aggs.append(
+            f"CAST(sum(CAST({x} AS {DEC})) AS DOUBLE) / count({x})"
+            f" AS {sql_name(f'mean_{c}')}"
+        )
+        aggs.append(
+            f"CAST(sum(CAST(({x} * {x}) AS {DEC})) AS DOUBLE) / count({x})"
+            f" AS {sql_name(f'msq_{c}')}"
+        )
+    stats = df.selectExpr(*aggs)  # global aggregate: one row
+    means = [sql_name(f"mean_{c}") for c in cols]
+    stds = []
+    for c, m in zip(cols, means):
+        var = f"({sql_name(f'msq_{c}')} - ({m} * {m}))"
+        stds.append(
+            f"CASE WHEN {var} <= 0.0D THEN 1.0D ELSE sqrt({var}) END"
+            f" AS {sql_name(f'std_{c}')}"
+        )
+    return stats.selectExpr(*means, *stds)
+
+
+def _zscore_sql(c: str, mean: str, std: str, prefix: str) -> str:
+    """``(double(c) - mean) / std AS <prefix><c>`` with ``mean``/``std``
+    already spelled as SQL (a column reference or a literal)."""
+    return f"(CAST({sql_name(c)} AS DOUBLE) - {mean}) / {std} AS {sql_name(prefix + c)}"
 
 
 def apply_standardizer(
@@ -84,22 +90,17 @@ def apply_standardizer(
     stats frame (no driver round-trip; the reference's M9 distributed)."""
     out = df.crossJoin(F.broadcast(stats))
     zcols = [
-        ((F.col(c).cast("double") - F.col(f"mean_{c}")) / F.col(f"std_{c}")).alias(
-            f"{prefix}{c}"
-        )
+        _zscore_sql(c, sql_name(f"mean_{c}"), sql_name(f"std_{c}"), prefix)
         for c in cols
     ]
-    return out.select(*df.columns, *zcols)
+    return out.selectExpr(*[sql_name(c) for c in df.columns], *zcols)
 
 
 def mse_score(zcols: Sequence[str]) -> Column:
     """Mean squared value across standardized features — the reconstruction-
     MSE-shaped anomaly score (M5: per-row MSE vs threshold)."""
-    total = None
-    for c in zcols:
-        sq = F.col(c) * F.col(c)
-        total = sq if total is None else total + sq
-    return total / F.lit(float(len(zcols)))
+    total = " + ".join(f"({sql_name(c)} * {sql_name(c)})" for c in zcols)
+    return F.expr(f"({total}) / {sql_lit(float(len(zcols)))}")
 
 
 def score_and_route(
@@ -300,11 +301,11 @@ def align_features(
     stream_anomaly_detector.py:237-261; here the schema is declared and the
     alignment is one projection)."""
     present = set(df.columns)
-    return df.select(
+    return df.selectExpr(
         *[
-            F.col(c).cast("double").alias(c)
+            f"CAST({sql_name(c)} AS DOUBLE) AS {sql_name(c)}"
             if c in present
-            else F.lit(fill).alias(c)
+            else f"{sql_lit(fill)} AS {sql_name(c)}"
             for c in expected_cols
         ]
     )
@@ -365,15 +366,23 @@ def apply_standardizer_literal(
     into every downstream tree, and with ~64 features Catalyst analysis of
     the duplicated subtrees dominates wall time (measured minutes on the
     reference-width 65-column input vs seconds with literals). Collecting
-    one row of scalars is not a data-path collect."""
+    one row of scalars is not a data-path collect.
+
+    Building the projection costs too, apart from analysis: it is one
+    ``selectExpr`` (about 70 gateway commands for 64 features), where a
+    ``Column`` per feature sent over 4,000 and took ~0.35 s per call on a
+    4-core host. The stats become bit-exact double literals
+    (``functions.scalars.sql_lit``)."""
     zcols = [
-        (
-            (F.col(c).cast("double") - F.lit(float(stats_row[f"mean_{c}"])))
-            / F.lit(float(stats_row[f"std_{c}"]))
-        ).alias(f"{prefix}{c}")
+        _zscore_sql(
+            c,
+            sql_lit(float(stats_row[f"mean_{c}"])),
+            sql_lit(float(stats_row[f"std_{c}"])),
+            prefix,
+        )
         for c in cols
     ]
-    return df.select(*df.columns, *zcols)
+    return df.selectExpr("*", *zcols)
 
 
 def pairwise_correlations(df, cols):

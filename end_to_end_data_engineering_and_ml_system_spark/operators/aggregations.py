@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..functions.scalars import sql_lit, sql_name
+
 
 def histogram(
     df: DataFrame,
@@ -88,14 +90,15 @@ def profile_columns(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     (same shape, no Expand) and accept ~2% error. Min/max are deliberately
     omitted: their string rendering is engine-specific, and a profile that
     can't be reproduced elsewhere is a weaker contract."""
-    aggs = [F.count("*").alias("__n")]
+    aggs = ["count(*) AS __n"]
+    stack_args = []
     for c in cols:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__nn_{c}"))
-        aggs.append(F.countDistinct(c).alias(f"__nd_{c}"))
-    row = df.agg(*aggs)
-    stacked = ", ".join(
-        f"'{c}', __nn_{c}, __nd_{c}" for c in cols
-    )
+        n, nn, nd = sql_name(c), sql_name(f"__nn_{c}"), sql_name(f"__nd_{c}")
+        aggs.append(f"sum(CASE WHEN {n} IS NULL THEN 1 ELSE 0 END) AS {nn}")
+        aggs.append(f"count(DISTINCT {n}) AS {nd}")
+        stack_args.append(f"{sql_lit(c)}, {nn}, {nd}")
+    row = df.selectExpr(*aggs)  # global aggregate: one row
+    stacked = ", ".join(stack_args)
     return row.selectExpr(
         f"stack({len(cols)}, {stacked}) AS (column, n_nulls, n_distinct)",
         "__n AS n_rows",

@@ -21,6 +21,8 @@ from collections.abc import Iterable, Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import sql_lit, sql_name
+
 _SANITIZE_RE = re.compile(r"[^0-9A-Za-z_]+")
 
 
@@ -102,12 +104,14 @@ def replace_values_with_null(
     """``when(col.isin(values), NULL).otherwise(col)`` over many columns in a
     single projection (ref: P7, preprocess_cicids2017.py:151-162 — the
     Infinity→null rewrite)."""
-    vals = list(values)
-    return df.select(
+    targets = set(cols)
+    vals = ", ".join(sql_lit(v) for v in values)
+    return df.selectExpr(
         *[
-            F.when(F.col(c).isin(vals), F.lit(None)).otherwise(F.col(c)).alias(c)
-            if c in set(cols)
-            else F.col(c)
+            f"CASE WHEN {sql_name(c)} IN ({vals}) THEN NULL ELSE {sql_name(c)} END"
+            f" AS {sql_name(c)}"
+            if c in targets
+            else sql_name(c)
             for c in df.columns
         ]
     )
@@ -116,9 +120,11 @@ def replace_values_with_null(
 def cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
     """Cast columns by name in one projection (ref: P6,
     stream_anomaly_detector.py:186-189)."""
-    return df.select(
+    return df.selectExpr(
         *[
-            F.col(c).cast(casts[c]).alias(c) if c in casts else F.col(c)
+            f"CAST({sql_name(c)} AS {casts[c]}) AS {sql_name(c)}"
+            if c in casts
+            else sql_name(c)
             for c in df.columns
         ]
     )

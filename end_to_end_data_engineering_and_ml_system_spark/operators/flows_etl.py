@@ -21,6 +21,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import sql_name
 from ..ml.pipeline import apply_standardizer_literal, fit_standardizer
 from .cleaning import (
     drop_columns_fuzzy,
@@ -145,8 +146,9 @@ def preprocess_flows(raw: DataFrame, seed: int = 42, split_fn=None) -> FlowsEtlR
     df = drop_columns_fuzzy(df, DROP_COLUMNS)  # P3
 
     feature_cols = [c for c in df.columns if c != "Label"]
-    df = df.select(
-        *[F.col(c).cast("double").alias(c) for c in feature_cols], "Label"
+    df = df.selectExpr(
+        *[f"CAST({sql_name(c)} AS DOUBLE) AS {sql_name(c)}" for c in feature_cols],
+        "Label",
     )  # P6
     df = df.na.drop()  # non-numeric strings became null at cast
 
@@ -175,11 +177,12 @@ def preprocess_flows(raw: DataFrame, seed: int = 42, split_fn=None) -> FlowsEtlR
     # variant duplicates the training-branch plan into every consumer and
     # Catalyst analysis blows up (minutes on the reference-width input)
     stats_row = stats.first()
-    train_z = apply_standardizer_literal(train_b, stats_row, feature_cols).select(
-        *[F.col(f"z_{c}").alias(c) for c in feature_cols]
+    unprefix = [f"{sql_name(f'z_{c}')} AS {sql_name(c)}" for c in feature_cols]
+    train_z = apply_standardizer_literal(train_b, stats_row, feature_cols).selectExpr(
+        *unprefix
     )
-    eval_z = apply_standardizer_literal(stream_eval, stats_row, feature_cols).select(
-        *[F.col(f"z_{c}").alias(c) for c in feature_cols], "Label"
+    eval_z = apply_standardizer_literal(stream_eval, stats_row, feature_cols).selectExpr(
+        *unprefix, "Label"
     )
     return FlowsEtlResult(
         train=train_z, stream_eval=eval_z, stats=stats, feature_cols=feature_cols

@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 _SCRATCH = "/dev/shm/spark-scratch"
 _SCRATCH_MIN_FREE = 16 * 2**30  # below this, shuffle spill on RAM is a hazard

@@ -208,6 +208,10 @@ class TxTable:
     def _write_data(self, df: DataFrame) -> str:
         part = os.path.join(self._data_dir, uuid.uuid4().hex)
         df.write.mode("error").parquet(part)
+        if not (self.stats_cols or self.bloom_cols):
+            # no sidecars: skip the read-back, whose parquet schema
+            # inference is a job of its own on every append
+            return part
         # Sidecars are computed from the COMMITTED bytes, never by
         # re-executing the input's lineage: a non-deterministic input
         # (rand-derived column, re-read mutable source) would otherwise

@@ -1,5 +1,9 @@
 from __future__ import annotations
 
+import threading
+import types
+from contextlib import contextmanager
+
 import pytest
 
 from end_to_end_data_engineering_and_ml_system_spark.session import get_spark
@@ -55,3 +59,27 @@ def _free_rank_caches():
         f"{leaked} rank-cache handle(s) owned by exited thread(s) — a "
         "worker code path forgot its per-query release_rank_caches()"
     )
+
+
+@contextmanager
+def gateway_commands():
+    """Count the py4j commands this thread sends to the JVM inside the
+    block: ``with gateway_commands() as sent: ...; sent.n``. Plan-building
+    cost in Python is mostly these round trips, so a budget on the
+    count catches a per-column Column loop that creeps back in."""
+    from py4j.java_gateway import GatewayClient
+
+    sent = types.SimpleNamespace(n=0)
+    orig = GatewayClient.send_command
+    me = threading.get_ident()
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.n += 1
+        return orig(self, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        yield sent
+    finally:
+        GatewayClient.send_command = orig

@@ -32,14 +32,20 @@ def test_profile_columns_counts_nulls_and_distincts(spark):
         profile_columns,
     )
 
+    # raw CICIDS-style headers: a space and a slash, and a quote, must be
+    # quoted in the generated SQL, not pasted in
+    cols = ["x", "y", "Flow Bytes/s", "it's"]
     df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "a"), (None, None)],
-        ["x", "y"],
+        [(1, "a", 1.5, "p"), (2, None, None, "p"), (3, "a", 2.5, None), (None, None, 2.5, "q")],
+        cols,
     )
-    got = {r["column"]: r for r in profile_columns(df, ["x", "y"]).collect()}
-    assert got["x"]["n_rows"] == 4 and got["y"]["n_rows"] == 4
+    got = {r["column"]: r for r in profile_columns(df, cols).collect()}
+    assert set(got) == set(cols)
+    assert all(got[c]["n_rows"] == 4 for c in cols)
     assert got["x"]["n_nulls"] == 1 and got["y"]["n_nulls"] == 2
     assert got["x"]["n_distinct"] == 3 and got["y"]["n_distinct"] == 1
+    assert got["Flow Bytes/s"]["n_nulls"] == 1 and got["Flow Bytes/s"]["n_distinct"] == 2
+    assert got["it's"]["n_nulls"] == 1 and got["it's"]["n_distinct"] == 2
 
 
 def test_approx_aggregates_within_tolerance(spark, sf_dir):

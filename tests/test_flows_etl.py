@@ -188,3 +188,40 @@ def test_dedup_keep_best_rejects_rn_collision(spark):
     df = spark.range(4).select("id", F.lit(1).alias("__rn"))
     with pytest.raises(ValueError, match="__rn"):
         dedup_keep_best(df, ["id"], [F.col("id")])
+
+
+def test_preprocess_flows_build_within_gateway_budget(spark):
+    """Building the ETL over a CICIDS-width frame (66 raw-header string
+    features) sends about 1,800 py4j commands with one ``selectExpr`` per
+    wide projection; a Column per feature sent about 42,000. A per-feature
+    Column loop coming back fails this budget."""
+    import random
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from end_to_end_data_engineering_and_ml_system_spark.streaming.schemas import (
+        FLOW_FEATURES,
+    )
+
+    from .conftest import gateway_commands
+
+    headers = [" " + c.replace("_", " ").title() for c in FLOW_FEATURES]
+    headers[FLOW_FEATURES.index("flow_bytes_s")] = "Flow Bytes/s"
+    rng = random.Random(3)
+    rows = []
+    for i in range(60):
+        vals = [f"{rng.uniform(0, 100):.3f}" for _ in headers]
+        if i % 7 == 0:
+            vals[FLOW_FEATURES.index("flow_bytes_s")] = "Infinity"
+        rows.append((*vals, "BENIGN" if i % 3 else "DoS Hulk"))
+    schema = StructType(
+        [StructField(h, StringType()) for h in (*headers, " Label")]
+    )
+    raw = spark.createDataFrame(rows, schema)
+    with gateway_commands() as sent:
+        res = preprocess_flows(raw, seed=42)
+    assert sent.n <= 5000, sent.n
+    assert "Flow_Bytes_s" in res.feature_cols
+    assert res.train.count() + res.stream_eval.count() == sum(
+        1 for r in rows if r[FLOW_FEATURES.index("flow_bytes_s")] != "Infinity"
+    )

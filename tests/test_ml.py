@@ -53,6 +53,10 @@ def test_routing_partitions_input(spark, sf_dir):
     assert all(0.0 < r.avg_confidence <= 1.0 for r in out)
 
 
+#: names that need quoting in SQL: a space, a slash, a dot, a backtick
+_ODD_NAMES = ["flow bytes", "Flow Bytes/s", "fwd.iat", "it`s"]
+
+
 def test_align_features_trims_pads_and_orders(spark, sf_dir):
     from end_to_end_data_engineering_and_ml_system_spark.ml.pipeline import align_features
 
@@ -63,6 +67,127 @@ def test_align_features_trims_pads_and_orders(spark, sf_dir):
     assert out.columns == ["l_extendedprice", "l_quantity", "l_missing"]
     assert out.schema["l_missing"].dataType.typeName() == "double"
     assert out.filter("l_missing != 0.0").count() == 0
+
+    odd = _ODD_NAMES
+    li = li.toDF(*odd[:3])
+    out = align_features(li, [odd[1], odd[3], odd[0]])
+    assert out.columns == [odd[1], odd[3], odd[0]]
+    assert {f.dataType.typeName() for f in out.schema.fields} == {"double"}
+    got = out.collect()
+    want = li.collect()
+    assert [r[odd[3]] for r in got] == [0.0] * len(want)  # zero-filled
+    assert [(r[0], r[2]) for r in got] == [
+        (float(r[odd[1]]), float(r[odd[0]])) for r in want
+    ]
+
+
+#: (mean, std) per odd column: a negative, -0.0, the smallest subnormal,
+#: the largest double, NaN and both infinities
+_ODD_STATS = [
+    (-2.75, 5e-324),
+    (-0.0, 1.7976931348623157e308),
+    (float("nan"), -3.5),
+    (float("inf"), float("-inf")),
+]
+
+
+def _same_double(a: float, b: float) -> bool:
+    """Bit-for-bit equal, any NaN equal to any NaN."""
+    import math
+    import struct
+
+    if math.isnan(a) or math.isnan(b):
+        return math.isnan(a) and math.isnan(b)
+    return struct.pack(">d", a) == struct.pack(">d", b)
+
+
+def test_standardizer_literal_bit_exact_for_odd_names_and_stats(spark):
+    """The stats reach the plan as SQL literals: every double, including
+    -0.0, subnormals, the extremes, NaN and ±inf, must survive the trip
+    bit for bit, and every column name must survive quoting."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from end_to_end_data_engineering_and_ml_system_spark.ml.pipeline import (
+        apply_standardizer_literal,
+    )
+
+    xs = [0.0, -0.0, -1.5, 3.25, 1e-300, 2.5e10, -7.0, float("nan"), float("inf"), 5e-324]
+    rows = [
+        (i, *[xs[(i + j) % len(xs)] for j in range(len(_ODD_NAMES))])
+        for i in range(len(xs))
+    ]
+    schema = StructType(
+        [StructField("row id", LongType())]
+        + [StructField(c, DoubleType()) for c in _ODD_NAMES]
+    )
+    df = spark.createDataFrame(rows, schema)
+    stats_row = {}
+    for c, (mean, std) in zip(_ODD_NAMES, _ODD_STATS):
+        stats_row[f"mean_{c}"], stats_row[f"std_{c}"] = mean, std
+
+    out = apply_standardizer_literal(df, stats_row, _ODD_NAMES)
+    assert out.columns == ["row id", *_ODD_NAMES, *[f"z_{c}" for c in _ODD_NAMES]]
+    got = sorted(out.collect(), key=lambda r: r["row id"])
+    x = np.array([r[1:] for r in rows], dtype="float64")
+    mean = np.array([m for m, _ in _ODD_STATS])
+    std = np.array([s for _, s in _ODD_STATS])
+    with np.errstate(all="ignore"):
+        want = (x - mean) / std
+    for r, w in zip(got, want):
+        for j, c in enumerate(_ODD_NAMES):
+            assert _same_double(r[f"z_{c}"], float(w[j])), (c, r[c], r[f"z_{c}"], w[j])
+
+
+def test_replace_and_cast_with_odd_names_and_values(spark):
+    """Values holding a quote or a backslash must match literally, and odd
+    column names must pass through the projection untouched."""
+    from end_to_end_data_engineering_and_ml_system_spark.operators.cleaning import (
+        cast_columns,
+        replace_values_with_null,
+    )
+
+    rows = [("it's", "1.5"), ("back\\slash", "it's"), ("it", "back\\slash"), ("x'\\", "2")]
+    df = spark.createDataFrame(rows, _ODD_NAMES[:2])
+    out = replace_values_with_null(df, _ODD_NAMES[:2], ["it's", "back\\slash", "x'\\"])
+    assert out.columns == _ODD_NAMES[:2]
+    assert [tuple(r) for r in out.collect()] == [
+        (None, "1.5"), (None, None), ("it", None), (None, "2"),
+    ]
+    # only the named columns are rewritten
+    kept = replace_values_with_null(df, _ODD_NAMES[1:2], ["it's"])
+    assert [tuple(r) for r in kept.collect()] == [
+        ("it's", "1.5"), ("back\\slash", None), ("it", "back\\slash"), ("x'\\", "2"),
+    ]
+    cast = cast_columns(out, {_ODD_NAMES[1]: "double"})
+    assert cast.columns == _ODD_NAMES[:2]
+    assert [r[1] for r in cast.collect()] == [1.5, None, None, 2.0]
+
+
+def test_detect_projections_stay_within_gateway_budget(spark):
+    """align + z-score over the 64 model features is one ``selectExpr``
+    each: about 140 py4j commands in all, where a Column per feature sent
+    6,710. A per-feature Column loop coming back fails this budget."""
+    from end_to_end_data_engineering_and_ml_system_spark.ml.pipeline import (
+        align_features,
+        apply_standardizer_literal,
+    )
+    from end_to_end_data_engineering_and_ml_system_spark.streaming.schemas import (
+        MODEL_FEATURES,
+    )
+
+    from .conftest import gateway_commands
+
+    df = spark.range(4).selectExpr(
+        "id AS __row", *[f"CAST(id AS DOUBLE) AS {c}" for c in MODEL_FEATURES]
+    )
+    stats_row = {f"mean_{c}": 0.5 * i for i, c in enumerate(MODEL_FEATURES)}
+    stats_row.update({f"std_{c}": 1.0 + i for i, c in enumerate(MODEL_FEATURES)})
+    with gateway_commands() as sent:
+        x = align_features(df, ("__row", *MODEL_FEATURES))
+        z = apply_standardizer_literal(x, stats_row, MODEL_FEATURES)
+    assert sent.n <= 300, sent.n
+    assert z.count() == 4
 
 
 def test_inference_fallback_marks_batch_normal(spark, sf_dir):

@@ -590,6 +590,28 @@ def test_stats_sidecars_computed_from_committed_bytes(spark, tmp_path):
     assert t.snapshot_pruned("r", mid, row["hi"]).count() == want
 
 
+def test_sidecar_free_append_runs_one_job(spark, tmp_path):
+    """With no stats or bloom columns there is nothing to compute from the
+    committed bytes, so an append is the parquet write alone: reading the
+    new dir back would add a schema-inference job to every append."""
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    ev = _events(spark)
+    t.append(ev.filter(F.col("event_type") == "click"))  # pins the schema
+    batch = ev.filter(F.col("event_type") == "error")
+    sc = spark.sparkContext
+    group = f"sidecar-free-append-{tmp_path.name}"
+    sc.setJobGroup(group, "sidecar-free append")
+    try:
+        t.append(batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert t.snapshot().count() == ev.filter(
+        F.col("event_type").isin("click", "error")
+    ).count()
+
+
 def test_date_and_decimal_stats_cols(spark, tmp_path):
     """DATE and DECIMAL stats columns must serialize into the sidecar
     (dates to ISO strings, decimals to conservatively-rounded floats) —
